@@ -364,17 +364,18 @@ def fixed_width_to_avro_fused(
     tasks: int = 32,
     codec: str = "snappy",
     prefix: str = "part-",
-    batch_rows: int = 65536,
 ) -> int:
     """Reference-shaped single-stage ingest: each task reads its byte
-    range, numpy-parses the fixed-width matrix, vector-encodes Avro and
-    writes one OCF file — data never materializes as Spark rows and
-    never crosses into the JVM (cf. the reference's chunked
+    ranges, numpy-parses the fixed-width matrix, vector-encodes Avro and
+    writes one OCF file per range — data never materializes as Spark
+    rows and never crosses into the JVM (cf. the reference's chunked
     parse→serialize pipeline, `fixed2avro/Exporters.go:105-138`). The
     per-partition imperative body is exactly what RDD.mapPartitions is
     for; everything upstream/downstream of ingest stays DataFrame.
 
-    Returns total rows written. Output files match
+    Rows are those of ``sources.fixedwidth_arrow.read_fixed_width_arrow``
+    (footer and blank lines dropped wherever they occur), whatever
+    ``tasks`` is. Returns total rows written. Output files match
     ``write_avro_ocf``'s schema (nullable unions) and naming.
     """
     import os
@@ -383,7 +384,7 @@ def fixed_width_to_avro_fused(
         parse_avro_fixed_schema
     from shredder_spark.sinks.avro import spark_schema_to_avro
     from shredder_spark.sources.fixedwidth_arrow import (
-        FixedWidthArrowReader, _Range, _parse_batch)
+        plan_ranges, range_batches)
     from shredder_spark.utils import ensure_package_on_executors
 
     fs = schema if isinstance(schema, FixedSchema) \
@@ -392,35 +393,25 @@ def fixed_width_to_avro_fused(
 
     ensure_package_on_executors(spark)
     os.makedirs(out_dir, exist_ok=True)
-    planner = FixedWidthArrowReader(
-        {"path": path, "cores": str(tasks)}, fs)
-    ranges = [(i, p.path, p.start, p.end)
-              for i, p in enumerate(planner.partitions())]
+    ranges = list(enumerate(plan_ranges(path, tasks)))
 
     def run(it) -> Iterator[tuple]:
-        for i, fpath, s, e in it:
-            rdr = FixedWidthArrowReader({"path": fpath, "cores": "1"}, fs)
-            mat = rdr._matrix(rdr._range_bytes(_Range(fpath, s, e)))
-            rc = RecordCodec(avro_schema)
+        rc = RecordCodec(avro_schema)
+        for i, (fpath, s, e) in it:
             out_path = os.path.join(out_dir, f"{prefix}{i:05d}.avro")
-
-            def gen() -> Iterator[pa.RecordBatch]:
-                for j in range(0, mat.shape[0], batch_rows):
-                    yield wire_batch(_parse_batch(mat[j:j + batch_rows], fs))
-
             with open(out_path, "wb") as fh:
-                n = write_ocf_arrow(fh, rc, gen(), codec=codec)
-            if n == 0:
-                os.remove(out_path)
+                n = write_ocf_arrow(
+                    fh, rc, map(wire_batch, range_batches(fs, fpath, s, e)),
+                    codec=codec)
+            if n == 0 and i > 0:  # part 0 stays, so an empty feed
+                os.remove(out_path)  # still leaves a readable schema
             yield (i, n)
 
-    # Pack ranges into exactly ``tasks`` partitions (r12: the planner
-    # emits one range per FILE when total/cores exceeds a file's size,
-    # so parallelize(ranges, len(ranges)) ran one task per file — 32
-    # concurrent tasks on the 32-file bench fixture regardless of the
-    # requested shape, which is what inflated every "per-core at the
-    # 4-task shape" figure carried since r8). mapPartitions iterates
-    # the slice's ranges sequentially inside one task.
+    # Pack ranges into exactly ``tasks`` partitions: a directory feed
+    # plans at least one range per file, and one task per range would
+    # run as many concurrent tasks as there are files whatever the
+    # requested shape. mapPartitions iterates the slice's ranges
+    # sequentially inside one task.
     counts = (spark.sparkContext
               .parallelize(ranges, max(min(tasks, len(ranges)), 1))
               .mapPartitions(run).collect())

@@ -8,8 +8,10 @@ table, replicated to land near the reference's ~1.3 GB input at
 sf0.1, then two stages are timed separately, mirroring the
 reference's own stage report (`README.md:32-33`):
 
-- ``parse``: fixed-width scan → 30 typed columns → noop sink. Pure
-  JVM (substring + try_cast inside whole-stage codegen).
+- ``parse``: fixed-width scan → 30 typed columns → noop sink, through
+  the Arrow tier (numpy batch parse in one ``mapInArrow`` pass); the
+  expression tier (substring + try_cast inside whole-stage codegen)
+  is timed alongside as ``parse_expr_*``.
 - ``avro``: the full fixed-width → snappy Avro OCF ingest through the
   engine's fused tier (byte-range read → numpy parse → vectorized
   Avro encode per task, output byte-identical to ``write_avro_ocf``);
@@ -225,22 +227,18 @@ def bench_ingest(spark: SparkSession, sf_dir: str) -> dict:
     except Exception:  # fused tier must never sink the bench
         avro_tier = "jvm" if jvm_avro else "python_ocf"
 
-    # r12 parse tier (guide §1.2 "the distributed algorithm" + §4.2,
-    # same rationale as the fused avro leg below): the timed parse leg
-    # now runs the engine's ARROW tier — executor-side byte-range
-    # reads, numpy batch parse, one Arrow crossing
-    # (sources/fixedwidth_arrow.py, golden-pinned equivalent to the
-    # expr tier) — which this round's A/B measured ~2x the expr tier
-    # at the 32-core shape. The expr tier stays timed and reported as
+    # The timed parse leg runs the engine's ARROW tier — spark.read.text
+    # split, numpy batch parse in one mapInArrow pass
+    # (sources/fixedwidth_arrow.py, property-tested equal to the expr
+    # tier). The expr tier stays timed and reported as
     # ``parse_expr_*`` so the r8–r11 per-key series continues
     # (OPTIMIZATION_r12.md).
     parse_tier = "arrow"
-    sj_parse = json.dumps(BENCH_SCHEMA)
     try:
         from shredder_spark.sources.fixedwidth_arrow import (
-            read_fixed_width_arrow_ds)
+            read_fixed_width_arrow)
         # untimed warm rep at the timed shape (worker spawn + imports)
-        (read_fixed_width_arrow_ds(spark, path, sj_parse, cores=cores)
+        (read_fixed_width_arrow(spark, path, BENCH_SCHEMA)
             .write.format("noop").mode("overwrite").save())
     except Exception:  # arrow tier must never sink the bench
         parse_tier = "expr"
@@ -255,8 +253,7 @@ def bench_ingest(spark: SparkSession, sf_dir: str) -> dict:
         t0 = time.perf_counter()
         if parse_tier == "arrow":
             try:
-                (read_fixed_width_arrow_ds(spark, path, sj_parse,
-                                           cores=cores)
+                (read_fixed_width_arrow(spark, path, BENCH_SCHEMA)
                     .write.format("noop").mode("overwrite").save())
             except Exception:
                 parse_tier = "expr"
@@ -301,9 +298,8 @@ def bench_ingest(spark: SparkSession, sf_dir: str) -> dict:
     #     bring B above it on this VM — that pins the floor;
     #   D utf8 rune-correct parse→snappy Avro (the path a feed WITHOUT
     #     the schema-level "encoding": "ascii" declaration runs);
-    #   E arrow tier→snappy Avro — the vectorized DataSource parse
-    #     (sources/fixedwidth_arrow.py): executor-side byte-range
-    #     reads, numpy batch parse, one Arrow crossing (round 8).
+    #   E arrow tier→snappy Avro — the mapInArrow numpy parse
+    #     (sources/fixedwidth_arrow.py).
     parse4_s = avro4_s = ceil4_s = utf84_s = arrow4_s = float("inf")
     arrow_parse4_s = fused4_s = float("inf")
     # ceiling input: cache a REVERSED-column projection — identical
@@ -354,20 +350,17 @@ def bench_ingest(spark: SparkSession, sf_dir: str) -> dict:
             utf84_s = min(utf84_s, time.perf_counter() - t0)
 
         try:
-            import json as _json
-
             from shredder_spark.sources.fixedwidth_arrow import (
-                read_fixed_width_arrow_ds)
+                read_fixed_width_arrow)
 
-            sj = _json.dumps(BENCH_SCHEMA)
             t0 = time.perf_counter()
-            (read_fixed_width_arrow_ds(spark, path, sj, cores=32)
+            (read_fixed_width_arrow(spark, path, BENCH_SCHEMA)
                 .coalesce(4)
                 .write.format("noop").mode("overwrite").save())
             arrow_parse4_s = min(arrow_parse4_s, time.perf_counter() - t0)
             if jvm_avro:
                 t0 = time.perf_counter()
-                (read_fixed_width_arrow_ds(spark, path, sj, cores=32)
+                (read_fixed_width_arrow(spark, path, BENCH_SCHEMA)
                     .coalesce(4)
                     .write.format(AVRO_FORMAT)
                     .option("compression", "snappy")

@@ -2,7 +2,9 @@
 
 Fixed-width parser invariants under randomly generated schemas, widths,
 multibyte UTF-8 content, CRLF edge rows, and footer placement:
-format→parse must be the identity on typed values. Plus the B28
+format→parse must be the identity on typed values, and on dirty feeds
+(ragged lines, bad values, LF-only or unterminated files) the columnar
+kernel's two readers must equal the expression tier. Plus the B28
 bounded check (approx_count_distinct within ±5% of exact).
 
 Hypothesis drives the generation; examples are batched (many rows per
@@ -24,7 +26,10 @@ import pyspark.sql.functions as F
 
 from shredder_spark.avro_schema import parse_avro_fixed_schema
 from shredder_spark.catalog import load_table
+from shredder_spark.sinks.avro import read_avro_ocf
+from shredder_spark.sinks.avro_vec import fixed_width_to_avro_fused
 from shredder_spark.sources.fixedwidth import read_fixed_width
+from shredder_spark.sources.fixedwidth_arrow import read_fixed_width_arrow
 
 CRLF = "\r\n"
 
@@ -90,8 +95,27 @@ def _cell(draw, type_name: str, width: int):
     raise AssertionError(type_name)
 
 
+# Dirty values: ones the expression tier reads as NULL, and ones it
+# reads by a rule a second parser must copy exactly (signs, padding,
+# overflow, Java float suffixes, calendar limits, multibyte digits).
+_INT_JUNK = ["x9", "1.5", "--5", "+7", "1_0", "0x1F", "12a", "99999999999",
+             "-", "\u0661\u0662"]
+_FLOAT_JUNK = ["1.2.3", "1.5d", "+nan", "NaN", "-Infinity", "1e", "0x1p3",
+               "1_0.5", "inf", "1e39"]
+_TS_JUNK = [" 1995-06-15-10.30.00", "1995-02-30-10.30.00",
+            "1995-06-15-24.00.00", "1995-06-15-10.30.60",
+            "1995-06-15-10.30.00.1 2", "+995-06-15-10.30.00",
+            "1995-06-15-10.30.00.-1", "1995-6-15-10.30.00", "not-a-timestamp"]
+_JUNK = {"int": _INT_JUNK, "long": _INT_JUNK, "float": _FLOAT_JUNK,
+         "double": _FLOAT_JUNK, "boolean": ["\u00f1", "yes", " n"],
+         "timestamp-micros": _TS_JUNK, "date": _TS_JUNK}
+
+
 @st.composite
-def _table(draw):
+def _table(draw, dirty=False):
+    """(schema, rows); a row is (cell texts, expected values). With
+    ``dirty``, cells may hold junk and lines may be cut short (down to
+    blank) or run long — the expected values then no longer hold."""
     schema = draw(_schema())
     fields = [(f["name"], f["type"]["type"], f["type"]["len"])
               for f in schema["fields"]]
@@ -99,18 +123,35 @@ def _table(draw):
     rows = []
     for _ in range(n_rows):
         cells = [draw(_cell(t, w)) for (_, t, w) in fields]
-        rows.append(([c[0] for c in cells], [c[1] for c in cells]))
+        texts = [c[0] for c in cells]
+        if dirty:
+            for i, (_, t, w) in enumerate(fields):
+                if t in _JUNK and draw(st.integers(0, 4)) == 0:
+                    junk = draw(st.sampled_from(_JUNK[t]))[:w]
+                    texts[i] = junk.ljust(w) if t in (
+                        "boolean", "timestamp-micros", "date") \
+                        else junk.rjust(w)
+            shape = draw(st.sampled_from(["exact"] * 3 + ["short", "long"]))
+            line = "".join(texts)
+            if shape == "short":
+                texts = [line[:draw(st.integers(0, len(line) - 1))]]
+            elif shape == "long":
+                texts.append("".join(draw(
+                    st.lists(_ALPHABET, min_size=1, max_size=6))))
+        rows.append((texts, [c[1] for c in cells]))
     return schema, rows
 
 
 # ------------------------------------------------------------------ helpers
 
-def _write_file(tmp_path, rows_text, footer_at=None):
+def _write_file(tmp_path, rows_text, footer_at=None, eol=CRLF,
+                final_eol=True):
     lines = ["".join(cells) for cells in rows_text]
     if footer_at is not None:
         lines.insert(footer_at, "*" * 12 + " trailer")
     p = tmp_path / "data.txt"
-    p.write_bytes((CRLF.join(lines) + CRLF).encode("utf-8"))
+    p.write_bytes((eol.join(lines) + (eol if final_eol else ""))
+                  .encode("utf-8"))
     return str(p)
 
 
@@ -163,6 +204,39 @@ def test_footer_terminates(spark, tmp_path_factory, data, footer_pos):
     # footer are kept only if they parse (single-split local file keeps
     # them — the reference stops mid-chunk; we declare filter semantics)
     assert len(got) == len(rows)
+
+
+@settings(max_examples=12, deadline=None, derandomize=True,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(data=_table(dirty=True), footer_pos=st.integers(0, 8),
+       lf_only=st.booleans(), final_eol=st.booleans())
+def test_kernel_tiers_match_expression_tier(spark, tmp_path_factory, data,
+                                            footer_pos, lf_only, final_eol):
+    """Differential: on dirty feeds, the kernel's mapInArrow read and
+    the fused Avro writer (any task count, read back from OCF) equal
+    the byte-slicing expression tier; on single-byte feeds, also the
+    default utf8 tier. The fused writer ends lines at LF either way."""
+    schema, rows = data
+    texts = [t for t, _ in rows]
+    eol = "\n" if lf_only else CRLF
+    tmp = tmp_path_factory.mktemp("prop")
+    path = _write_file(tmp, texts, footer_at=min(footer_pos, len(rows)),
+                       eol=eol, final_eol=final_eol)
+    sj = json.dumps(schema)
+    tiers = {"arrow": read_fixed_width_arrow(spark, path, sj, line_sep=eol)}
+    for tasks in (1, 2, 3, 7):
+        out = str(tmp / f"fused{tasks}")
+        fixed_width_to_avro_fused(spark, path, sj, out, tasks=tasks)
+        tiers[f"fused{tasks}"] = read_avro_ocf(spark, out)
+    refs = {"ascii": read_fixed_width(spark, path, sj, line_sep=eol,
+                                      encoding="ascii")}
+    if all("".join(t).isascii() for t in texts):
+        refs["utf8"] = read_fixed_width(spark, path, sj, line_sep=eol)
+    for rname, ref in refs.items():
+        for tname, tier in tiers.items():
+            diff = tier.exceptAll(ref).union(ref.exceptAll(tier))
+            assert diff.count() == 0, (rname, tname, diff.collect())
 
 
 def test_quarantine_splits_bad_rows(spark, tmp_path):
